@@ -85,7 +85,12 @@ object Bench {
     * classifications stay interpretable off-host.
     */
   private val HealthyCalibSec =
-    sys.env.get("SPARK_GRAFT_CALIB_REF").map(_.toDouble).getOrElse(0.41)
+    sys.env.get("SPARK_GRAFT_CALIB_REF").map(parseCalibRef).getOrElse(0.41)
+  /** The override's value: positive finite seconds, else a clear failure. */
+  private[graft] def parseCalibRef(raw: String): Double =
+    raw.trim.toDoubleOption.filter(v => v > 0 && v.isFinite).getOrElse(
+      throw new IllegalArgumentException("SPARK_GRAFT_CALIB_REF must be a " +
+        s"positive finite number of seconds, got '$raw'"))
   private val DegradedCalibFactor = 1.5
   private def isDegraded(calibMax: Double): Boolean =
     calibMax > DegradedCalibFactor * HealthyCalibSec

@@ -2,25 +2,26 @@ package pipeline
 
 import guards.QualityPipeline
 import guards.expr.ScoreFns
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The production job (SURVEY.md §4.1): read → resume-filter → window →
-  * (salted) score → rules → fork into filtered-output sink + per-partition
+  * salted score → rules → fork into filtered-output sink + per-partition
   * lineage/rule-hit metrics sink → commit manifest.
   *
-  * Scale design (BASELINE.json:6):
-  * - logical resume partitions: `pmod(murmur3_32(conv_id), 256)` — decoupled
-  *   from shuffle parallelism (SURVEY.md §8.6), so restart granularity is
-  *   stable across cluster sizes.
-  * - skew: the window exchange must hash by conv_id (locality for the
-  *   lag/row_number rules), which would make a mega-conversation a straggler
-  *   if scoring ran in the same stage. With `salted=true` the window stage
-  *   computes ONLY the O(1)/row lag columns, then a salted repartition on
-  *   (conv_id, turn_idx) spreads every conversation across all cores for
-  *   the expensive model scoring — per-turn rules no longer need conv
-  *   locality because the window context is already attached to the row.
-  * - AQE skew handling stays on for the join/agg side (Sessions.tune).
+  * Scale design (BASELINE.json:6), three exchanges:
+  * - window by conv_id: locality for the lag/row_number rules. It computes
+  *   ONLY the O(1)/row lag columns, so a mega-conversation never makes the
+  *   expensive scoring a straggler.
+  * - salted spread on (conv_id, turn_idx): scoring (exactly once) runs
+  *   spread across every core; per-turn rules no longer need conv locality
+  *   because the window context is already attached to the row.
+  * - rebalance of the kept rows by part_id: each logical resume partition
+  *   `pmod(murmur3_32(conv_id), 256)` is written by one task, so a run
+  *   writes one file per partition (not tasks × 256) until a partition
+  *   outgrows the AQE advisory size, which AQE then splits.
+  * Logical partitions are decoupled from shuffle parallelism (SURVEY.md
+  * §8.6), so restart granularity is stable across cluster sizes.
   */
 object QualityFilterJob {
   final val LogicalPartitions = 256
@@ -43,7 +44,6 @@ object QualityFilterJob {
       store: TranscriptStore,
       outDir: String,
       runId: String,
-      salted: Boolean = true,
       inputSnapshot: String = "synth@seed42",
       configSha: String = "rulespec-v1"): Result = {
     val t0 = System.nanoTime()
@@ -66,31 +66,22 @@ object QualityFilterJob {
       if (committed.isEmpty) turns
       else turns.filter(!col("part_id").isin(committed.toSeq: _*))
 
-    val scored0 = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("conv_id")
-        .orderBy(QualityPipeline.OrderCols.map(col): _*)
-      val withWin = pending
-        .withColumn("_rn", row_number().over(w))
-        .withColumn("_prev_idx", lag("turn_idx", 1).over(w))
-        .withColumn("_prev_role", lag("role", 1).over(w))
-      val spread =
-        if (salted) withWin.repartition(col("conv_id"), col("turn_idx"))
-        else withWin
-      QualityPipeline.scorePostWindow(spread)
-    }
+    val scored = QualityPipeline.scorePostWindow(QualityPipeline.withWindow(pending)
+      .repartition(col("conv_id"), col("turn_idx")))
     // ---- SINGLE pass: the kept-output write is the only job over the
     // scored corpus; per-partition lineage/rule metrics and the commit
-    // stats ride the same pass via observe() (PartitionMetricsAgg), so the
-    // 100 TB corpus is scored exactly once — no persist, no re-scan.
+    // stats ride the salted scoring stage via observe() (PartitionMetricsAgg),
+    // so the corpus is scored exactly once — no persist, no re-scan. Only
+    // the projected kept rows cross the part_id rebalance to the writer.
     val obs = org.apache.spark.sql.Observation(s"qfj-$runId")
-    scored0
+    scored
       .observe(obs, guards.expr.PartitionMetricsAgg(
         col("part_id"), col("keep"), col("text"), col("rule_hits")).as("pm"))
       .filter(col("keep"))
       .select(col("part_id"), col("conv_id"), col("turn_idx"), col("role"),
         col("scrubbed_text"), col("tool"), col("ts"), col("lang"),
         col("lang_conf"), col("ppl"))
+      .hint("rebalance", col("part_id"))
       .write.mode(SaveMode.Overwrite).partitionBy("part_id")
       .option("partitionOverwriteMode", "dynamic")
       .parquet(s"$outDir/kept")

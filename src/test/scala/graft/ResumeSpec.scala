@@ -1,9 +1,10 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import pipeline.{Manifest, QualityFilterJob, SynthStore}
+import scala.jdk.CollectionConverters._
 
 /** Suite (f) of SURVEY.md §6.3: idempotent partition-granular resume.
   * Simulates a run killed after k partition commits by tampering a
@@ -27,6 +28,35 @@ class ResumeSpec extends AnyFunSuite {
         col("part_id")))
       .collect().map(_.getString(0)).toSet
 
+  /** Simulates a kill after half the commits: the manifest keeps the first
+    * half of `res`'s partitions, the other half loses its output dirs.
+    * Returns (committed, lost).
+    */
+  private def loseLastHalf(dir: String, res: QualityFilterJob.Result): (Seq[Int], Seq[Int]) = {
+    val all = res.processedPartitions
+    val (committed, lost) = all.splitAt(all.size / 2)
+    Manifest.write(dir, Manifest.read(dir).get.copy(committed = committed.toSet))
+    lost.foreach { pid =>
+      deleteRec(Paths.get(s"$dir/kept/part_id=$pid"))
+      deleteRec(Paths.get(s"$dir/metrics/partition_id=$pid"))
+    }
+    (committed, lost)
+  }
+
+  /** Number of parquet data files in each `kept/part_id=*` directory. */
+  private def keptFilesPerPart(dir: String): Map[String, Int] = {
+    def list(p: Path): Seq[Path] = {
+      val s = Files.list(p)
+      try s.iterator().asScala.toList finally s.close()
+    }
+    list(Paths.get(s"$dir/kept"))
+      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("part_id="))
+      .map(d => d.getFileName.toString -> list(d).count { f =>
+        val n = f.getFileName.toString
+        n.startsWith("part-") && n.endsWith(".parquet")
+      }).toMap
+  }
+
   test("full run, kill-after-k-commits, resumed run: identical output, no reprocessing") {
     val dirA = Files.createTempDirectory("graft_resume_a").toString
     val dirB = Files.createTempDirectory("graft_resume_b").toString
@@ -37,15 +67,8 @@ class ResumeSpec extends AnyFunSuite {
       assert(resA.processedPartitions.nonEmpty && resA.skippedPartitions.isEmpty)
 
       // run B fully, then tamper: pretend the last half never committed
-      val resB1 = QualityFilterJob.run(spark, store, dirB, "runB")
-      val all = resB1.processedPartitions
-      val (committed, lost) = all.splitAt(all.size / 2)
-      val m = Manifest.read(dirB).get
-      Manifest.write(dirB, m.copy(committed = committed.toSet))
-      lost.foreach { pid =>
-        deleteRec(java.nio.file.Paths.get(s"$dirB/kept/part_id=$pid"))
-        deleteRec(java.nio.file.Paths.get(s"$dirB/metrics/partition_id=$pid"))
-      }
+      val (committed, lost) =
+        loseLastHalf(dirB, QualityFilterJob.run(spark, store, dirB, "runB"))
 
       val resB2 = QualityFilterJob.run(spark, store, dirB, "runB2")
       assert(resB2.processedPartitions.toSet == lost.toSet,
@@ -58,8 +81,39 @@ class ResumeSpec extends AnyFunSuite {
       assert(resB3.processedPartitions.isEmpty)
       assert(keptRows(dirB) == keptRows(dirA))
     } finally {
-      deleteRec(java.nio.file.Paths.get(dirA))
-      deleteRec(java.nio.file.Paths.get(dirB))
+      deleteRec(Paths.get(dirA))
+      deleteRec(Paths.get(dirB))
+    }
+  }
+
+  test("kept layout: one file per logical partition, fresh and resumed") {
+    // without AQE coalescing every shuffle partition is its own write task,
+    // so a part_id spread over several tasks would show as several files
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prior = spark.conf.getOption(key)
+    val dirA = Files.createTempDirectory("graft_layout_a").toString
+    val dirB = Files.createTempDirectory("graft_layout_b").toString
+    try {
+      spark.conf.set(key, "false")
+      val store = SynthStore(Target)
+      val resA = QualityFilterJob.run(spark, store, dirA, "layoutA")
+      val filesA = keptFilesPerPart(dirA)
+      assert(filesA.nonEmpty && filesA.keySet.subsetOf(
+        resA.processedPartitions.map(p => s"part_id=$p").toSet), filesA.toString)
+      assert(filesA.values.forall(_ == 1), s"fresh run: $filesA")
+
+      val (_, lost) =
+        loseLastHalf(dirB, QualityFilterJob.run(spark, store, dirB, "layoutB"))
+      val resB = QualityFilterJob.run(spark, store, dirB, "layoutB2")
+      assert(resB.processedPartitions.toSet == lost.toSet)
+      val filesB = keptFilesPerPart(dirB)
+      assert(filesB.keySet == filesA.keySet)
+      assert(filesB.values.forall(_ == 1), s"resumed run: $filesB")
+      assert(keptRows(dirB) == keptRows(dirA), "resumed output differs from uninterrupted run")
+    } finally {
+      prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      deleteRec(Paths.get(dirA))
+      deleteRec(Paths.get(dirB))
     }
   }
 
@@ -77,7 +131,7 @@ class ResumeSpec extends AnyFunSuite {
       val agg = m.filter(col("rule") === "_total")
         .agg(sum("turns_in"), sum("turns_kept"), sum("hits")).head()
       assert(agg.getLong(0) - agg.getLong(1) == agg.getLong(2))
-    } finally deleteRec(java.nio.file.Paths.get(dir))
+    } finally deleteRec(Paths.get(dir))
   }
 
   test("zero-work run on a fresh dir still creates a readable empty metrics table") {
@@ -92,7 +146,7 @@ class ResumeSpec extends AnyFunSuite {
       val m = spark.read.parquet(s"$dir/metrics")
       assert(m.count() == 0)
       assert(QualityFilterJob.metricsSchemaCols.toSet.subsetOf(m.columns.toSet))
-    } finally deleteRec(java.nio.file.Paths.get(dir))
+    } finally deleteRec(Paths.get(dir))
   }
 
   test("manifest round-trips") {
