@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import pipeline.Sessions
 
 /** Simhash recall-under-capping probe (one-shot tool, companion to
   * CapStats): the simhash tier provably drops candidate pairs when a
@@ -28,13 +28,7 @@ import org.apache.spark.sql.functions._
 object CapRecall {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-caprecall")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
       .persist()

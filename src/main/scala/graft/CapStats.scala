@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import pipeline.Sessions
 
 /** Bucket-cap sensitivity probe (one-shot tool, not part of the bench):
   * reports, for each candidate-generation tier (minhash bands, simhash
@@ -16,13 +16,7 @@ import org.apache.spark.sql.SparkSession
 object CapStats {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-capstats")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")

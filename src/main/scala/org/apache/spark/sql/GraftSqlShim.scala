@@ -22,4 +22,9 @@ object GraftSqlShim {
       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+
+  /** Block until every posted listener event is delivered (`waitUntilEmpty`
+    * is spark-private); graft.Profile reads its listener only after this.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

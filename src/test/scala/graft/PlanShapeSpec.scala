@@ -11,7 +11,7 @@ import pipeline.SynthStore
   * 100 TB story rests on (SURVEY.md §5): exchange counts on the label
   * paths, parquet predicate pushdown / column pruning, and "no cartesian
   * product ever sneaks into a non-cross query". These held by inspection
-  * (graft.ExplainAudit); this spec makes a plan regression fail CI.
+  * (graft.Profile --explain); this spec makes a plan regression fail CI.
   */
 class PlanShapeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark

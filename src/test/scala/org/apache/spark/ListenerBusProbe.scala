@@ -1,0 +1,6 @@
+package org.apache.spark
+
+/** Test access to the spark-private listener bus. */
+object ListenerBusProbe {
+  def listenerCount(sc: SparkContext): Int = sc.listenerBus.listeners.size
+}
